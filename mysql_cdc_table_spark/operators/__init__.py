@@ -826,6 +826,18 @@ ROUND15_LATE_KEYS: tuple[str, ...] = (
 )
 
 
+def artifact_round(path) -> int | None:
+    """Round number of a driver artifact named ``<KIND>_r<NN>[_suffix]``
+    — the leading digits after ``_r`` only, so a suffixed companion
+    (``CORRECTNESS_r16_c8.json``, an 8-core run) belongs to round 16.
+    None for a name with no round number."""
+    import re
+    from pathlib import Path
+
+    m = re.search(r"_r(\d+)", Path(path).stem)
+    return int(m.group(1)) if m else None
+
+
 def _last_seen_rounds() -> dict[str, int]:
     """key -> LATEST driver round with a CORRECTNESS row — the staleness
     metric the backfill sorts by. (First-seen is the wrong metric: a key
@@ -840,7 +852,9 @@ def _last_seen_rounds() -> dict[str, int]:
     root = Path(__file__).resolve().parents[2]
     seen: dict[str, int] = {}
     for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(path.stem.split("_r")[1])
+        rnd = artifact_round(path)
+        if rnd is None:
+            continue
         try:
             rows = json.loads(path.read_text())
         except (OSError, ValueError):

@@ -51,17 +51,20 @@ Json_diff_vector to the before-image. Payload-bearing events the
 reader can't decode (pre-5.6 rows-v1, ZSTD with no backend at all)
 raise instead of silently skipping.
 
-Scale: one binlog file is one sequential decode unit — the format is
-stateful (GTID and TABLE_MAP apply to subsequent events), exactly the
-reference's scan model (A2/A8). Parallelism is across files (MySQL
-rotates ~1 GiB); the decode itself is a ``mapInPandas`` batch walk with
-no shuffle. For splittable single-file parallelism use the packed
-format (footer sync index) — real binlog doesn't support it.
+Scale: the format is stateful (GTID and TABLE_MAP apply to subsequent
+events), so ``mysql_binlog_read`` decodes one file as one sequential
+unit — the reference's scan model (A2/A8), parallel across files
+(MySQL rotates ~1 GiB). ``mysql_binlog_read_parallel`` and the
+``mysql_binlog`` format reader split files too: plan_binlog_scan
+header-walks them on the driver into transaction-aligned ranges that
+carry the state a mid-file decoder replays, and one Spark stage
+decodes the ranges, with no shuffle.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import logging
 import re
 import struct
 import zlib
@@ -1911,15 +1914,7 @@ def binlog_chain_gaps(path: str) -> list[tuple[str, str]]:
     the index file blindly (binlog_table_reader.cc:39-57)."""
     import os
 
-    local = _strip_file_scheme(path)
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = list_binlog_files(path)
     gaps: list[tuple[str, str]] = []
     for i, p in enumerate(paths[:-1]):
         want = binlog_file_rotate_target(p)
@@ -2870,6 +2865,25 @@ def _strip_file_scheme(path: str) -> str:
     return path
 
 
+def list_binlog_files(path: str | list[str] | tuple[str, ...]) -> list[str]:
+    """The binlog series ``path`` names, ``file:`` scheme stripped: a
+    directory's data files in name order (hidden/underscore names and
+    ``.index`` listings skipped — the reference's binlog.index contract),
+    a single file, or an explicit list of files kept as given."""
+    import os
+
+    if isinstance(path, (list, tuple)):
+        return [_strip_file_scheme(p) for p in path]
+    local = _strip_file_scheme(path)
+    if not os.path.isdir(local):
+        return [local]
+    return sorted(
+        os.path.join(local, n)
+        for n in os.listdir(local)
+        if not n.startswith(("_", ".")) and not n.endswith(".index")
+    )
+
+
 _BINARY_FILE_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType()),
@@ -3547,26 +3561,12 @@ def binlog_executed_gtid_set(spark: SparkSession, path: str) -> DataFrame:
     header I/O plus two self-anti-joins on gno. Single-source view
     (gnos only); a multi-source series would group the same
     computation by sid."""
-    import os
-
     import pandas as pd
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://") :]
-    elif local.startswith("file:"):
-        local = local[len("file:") :]
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = list_binlog_files(path)
     if not paths:
         return spark.createDataFrame(
             [], "start_gno long, end_gno long, n_gnos long"
@@ -3796,19 +3796,9 @@ def binlog_ddl_history(spark: SparkSession, path: str) -> DataFrame:
     row decode anywhere. The reference default-skips QUERY events
     entirely (binlog_table_reader.cc:427-428), so DDL provenance is
     invisible to it."""
-    import os
-
     import pandas as pd
 
-    local = _strip_file_scheme(path)
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = list_binlog_files(path)
     schema = (
         "gno long, file_seq int, offset long, commit_ts long, "
         "database string, statement string"
@@ -3995,27 +3985,13 @@ def mysql_binlog_read_time_range(
     window exactly. The reference has no time surface at all — its
     users re-scan everything and filter __tm after decoding the full
     history."""
-    import os
-
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://") :]
-    elif local.startswith("file:"):
-        local = local[len("file:") :]
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = list_binlog_files(path)
     start_after, stop_at = binlog_time_to_gno_bounds(
         paths, start_ts, stop_ts
     )
     out = mysql_binlog_read_parallel(
         spark,
-        path,
+        paths,
         target,
         database,
         table,
@@ -4159,14 +4135,18 @@ def scan_binlog_splits_file(
 
 
 # In-memory split-spec cache: bounded LRU, not a plain dict — a
-# long-lived Spark Python worker scanning many files/windows would
-# otherwise pin every (path, size, mtime, bounds) combination's full
-# split list (including TABLE_MAP bodies) for the process lifetime.
-# Evictions stay cheap: the disk JSON tier below re-warms a miss.
+# long-lived driver scanning many files/windows would otherwise pin
+# every (path, size, mtime, bounds) combination's full split list
+# (including TABLE_MAP bodies) for the process lifetime. Evictions
+# stay cheap: the disk JSON tier below re-warms a miss. The lock
+# makes get+move_to_end and insert+evict atomic: the driver plans
+# scans from any thread (streaming batches, concurrent jobs).
 import collections as _collections
+import threading as _threading
 
 _SPLIT_MEM_CACHE: "_collections.OrderedDict" = _collections.OrderedDict()
 _SPLIT_MEM_CACHE_MAX = 64
+_SPLIT_MEM_LOCK = _threading.Lock()
 
 
 def scan_binlog_splits_cached(
@@ -4177,6 +4157,7 @@ def scan_binlog_splits_cached(
     start_after_gno: int | None = None,
     stop_at_gno: int | None = None,
     start_after_sets: dict[bytes, int] | None = None,
+    stats: dict[str, int] | None = None,
 ) -> list[dict]:
     """``scan_binlog_splits_file`` behind a cache keyed on (abs path,
     size, mtime_ns, split_bytes). The serial header walk is the
@@ -4191,7 +4172,9 @@ def scan_binlog_splits_cached(
     per-UID mode-0700 directory (ownership verified on every use —
     a pre-planted or permission-loosened dir bypasses the disk tier),
     and is JSON (base64 for the binary TABLE_MAP bodies), not pickle,
-    so even a compromised entry cannot execute code."""
+    so even a compromised entry cannot execute code. ``stats``, when
+    given, counts which tier served the call: ``mem``, ``disk`` or
+    ``walk`` (a real header walk)."""
     import base64
     import hashlib
     import json
@@ -4211,9 +4194,13 @@ def scan_binlog_splits_cached(
         ap, st.st_size, st.st_mtime_ns, target_split_bytes,
         start_after_gno, stop_at_gno, sets_key,
     )
-    hit = _SPLIT_MEM_CACHE.get(key)
+    stats = {} if stats is None else stats
+    with _SPLIT_MEM_LOCK:
+        hit = _SPLIT_MEM_CACHE.get(key)
+        if hit is not None:
+            _SPLIT_MEM_CACHE.move_to_end(key)
     if hit is not None:
-        _SPLIT_MEM_CACHE.move_to_end(key)
+        stats["mem"] = stats.get("mem", 0) + 1
         return hit
     tag = hashlib.sha256(repr(key).encode()).hexdigest()[:32]
     # per-UID dir, mode 0700: the default tempdir is world-writable and
@@ -4259,6 +4246,8 @@ def scan_binlog_splits_cached(
         ]
     except (OSError, ValueError, KeyError, TypeError):
         splits = None
+    tier = "disk" if splits is not None else "walk"
+    stats[tier] = stats.get(tier, 0) + 1
     if splits is None:
         splits = scan_binlog_splits_file(
             ap,
@@ -4290,16 +4279,17 @@ def scan_binlog_splits_cached(
                     for s in splits
                 ]
             )
-            tmp = f"{fpath}.tmp{os.getpid()}"
+            tmp = f"{fpath}.tmp{os.getpid()}.{_threading.get_ident()}"
             with open(tmp, "w") as fh:
                 fh.write(payload)
             os.replace(tmp, fpath)  # atomic: concurrent walkers race safely
         except OSError:
             pass  # cache is best-effort; the walk already succeeded
-    _SPLIT_MEM_CACHE[key] = splits
-    _SPLIT_MEM_CACHE.move_to_end(key)
-    while len(_SPLIT_MEM_CACHE) > _SPLIT_MEM_CACHE_MAX:
-        _SPLIT_MEM_CACHE.popitem(last=False)
+    with _SPLIT_MEM_LOCK:
+        _SPLIT_MEM_CACHE[key] = splits
+        _SPLIT_MEM_CACHE.move_to_end(key)
+        while len(_SPLIT_MEM_CACHE) > _SPLIT_MEM_CACHE_MAX:
+            _SPLIT_MEM_CACHE.popitem(last=False)
     return splits
 
 
@@ -4309,28 +4299,171 @@ _SPLIT_SCHEMA = T.StructType(
         T.StructField("file_seq", T.IntegerType()),
         T.StructField("start", T.LongType()),
         T.StructField("end", T.LongType()),
-        T.StructField("checksum", T.IntegerType()),  # -1 unknown, 0, 1
+        T.StructField("checksum", T.BooleanType()),  # null: no FDE yet
         T.StructField("gtid", T.LongType()),
         T.StructField("sid", T.BinaryType()),
-        T.StructField("maps", T.BinaryType()),  # 4-byte-LE length-prefixed
+        T.StructField("table_maps", T.ArrayType(T.BinaryType())),
     ]
 )
 
-
-def _pack_maps(bodies: list[bytes]) -> bytes:
-    out = bytearray()
-    for b in bodies:
-        out += len(b).to_bytes(4, "little") + b
-    return bytes(out)
+_log = logging.getLogger("mysql_cdc_table_spark.binlog")
 
 
-def _unpack_maps(blob: bytes) -> list[bytes]:
-    out, pos = [], 0
-    while pos < len(blob):
-        ln = int.from_bytes(blob[pos : pos + 4], "little")
-        out.append(blob[pos + 4 : pos + 4 + ln])
-        pos += 4 + ln
-    return out
+def plan_binlog_scan(
+    paths: list[str],
+    split_bytes: int = 64 << 20,
+    *,
+    start_after_gno: int | None = None,
+    stop_at_gno: int | None = None,
+    start_after_sets: dict[bytes, int] | None = None,
+) -> list[dict]:
+    """The driver-side plan of a binlog scan, shared by
+    ``mysql_binlog_read_parallel`` and the ``mysql_binlog`` format
+    reader. Whole files drop off their PREVIOUS_GTIDS heads
+    (prune_binlog_series_by_gtid, or ``_sets`` for a per-sid start
+    bound); each kept file is header-walked into transaction-aligned
+    split specs carrying the state a mid-file decoder replays
+    (scan_binlog_splits_cached: a warm scan hits its memory or disk
+    tier and walks nothing). Returns one dict per range with the
+    ``_SPLIT_SCHEMA`` fields.
+
+    Logs one DEBUG record per plan on ``mysql_cdc_table_spark.binlog``
+    whose ``binlog_plan`` attribute holds the counters: files listed
+    and pruned, splits, and the split cache's memory hits, disk hits
+    and walks."""
+    if start_after_sets is not None:
+        kept = prune_binlog_series_by_gtid_sets(paths, start_after_sets)
+    else:
+        kept = prune_binlog_series_by_gtid(paths, start_after_gno, stop_at_gno)
+    tiers: dict[str, int] = {}
+    specs = []
+    for p in kept:
+        seq = _file_seq_of(p)
+        for s in scan_binlog_splits_cached(
+            p,
+            split_bytes,
+            start_after_gno=start_after_gno,
+            stop_at_gno=stop_at_gno,
+            start_after_sets=start_after_sets,
+            stats=tiers,
+        ):
+            specs.append({"path": p, "file_seq": seq, **s})
+    counters = {
+        "files_listed": len(paths),
+        "files_pruned": len(paths) - len(kept),
+        "splits": len(specs),
+        "cache_mem_hits": tiers.get("mem", 0),
+        "cache_disk_hits": tiers.get("disk", 0),
+        "walks": tiers.get("walk", 0),
+    }
+    _log.debug(
+        "binlog scan plan: %s",
+        " ".join(f"{k}={v}" for k, v in counters.items()),
+        extra={"binlog_plan": counters},
+    )
+    return specs
+
+
+def _decode_split(
+    spec: dict,
+    target: T.StructType,
+    database: str,
+    table: str,
+    gtid_format: str,
+    capture_query: bool,
+    *,
+    start_after_gno: int | None = None,
+    stop_at_gno: int | None = None,
+    start_after_sets: dict[bytes, int] | None = None,
+) -> Iterator:
+    """Range-decode one planned split through the columnar kernel:
+    read its byte range, replay the carried TABLE_MAP/GTID/checksum
+    state, and keep __event_seq the absolute file offset. Files are
+    reopened with plain ``open`` (executor-local contract; on object
+    stores mount them).
+
+    The GTID bounds the plan was cut with also filter the rows — the
+    one copy of the exactness contract both read surfaces share:
+    header pruning is a superset cut (a malformed stream can break gno
+    monotonicity inside a kept range, and interleaved consumed
+    transactions can follow a per-sid window open). A per-sid bound
+    keys on each row's ``__gtid_src``, so ``start_after_sets`` needs
+    ``gtid_format="uuid_gno"``; an absent sid keeps every gno > 0."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        decode_binlog_record_batches,
+    )
+
+    with open(spec["path"], "rb") as fh:
+        fh.seek(spec["start"])
+        blob = fh.read(spec["end"] - spec["start"])
+    uuid_bounds = (
+        None
+        if start_after_sets is None
+        else {_sid_to_uuid(sid): int(g) for sid, g in start_after_sets.items()}
+    )
+    for batch in decode_binlog_record_batches(
+        blob,
+        target,
+        database,
+        table,
+        file_seq=spec["file_seq"],
+        gtid_format=gtid_format,
+        init_state={
+            "checksum": spec["checksum"],
+            "gtid": spec["gtid"],
+            "sid": spec["sid"],
+            "table_maps": list(spec["table_maps"]),
+        },
+        seq_base=spec["start"],
+        capture_query=capture_query,
+    ):
+        if start_after_gno is not None:
+            batch = batch.filter(pc.greater(batch["__gtid"], start_after_gno))
+        if stop_at_gno is not None:
+            batch = batch.filter(pc.less_equal(batch["__gtid"], stop_at_gno))
+        if uuid_bounds is not None and batch.num_rows:
+            bounds = [
+                uuid_bounds.get((u or "").lower(), 0)
+                for u in batch["__gtid_src"].to_pylist()
+            ]
+            batch = batch.filter(
+                pc.greater(batch["__gtid"], pa.array(bounds, pa.int64()))
+            )
+        if batch.num_rows:
+            yield batch
+
+
+def _spec_relation(spark: SparkSession, specs: list[dict]) -> DataFrame:
+    """The split specs as a DataFrame over min(#specs,
+    defaultParallelism) tasks whose size the optimizer does NOT know.
+
+    Both properties matter. Every task range-decodes, so an empty one
+    only pays a Python worker start; and whatever the optimizer
+    estimates for the specs it carries through mapInArrow to the whole
+    decoded changelog — a LocalRelation (``createDataFrame`` of an
+    Arrow table) would price a 100 GB history at a few KB and make it
+    a broadcast candidate under autoBroadcastJoinThreshold. An RDD
+    relation is sized spark.sql.defaultSizeInBytes, i.e. never
+    broadcast. This is ``createDataFrame(list, schema)`` minus its
+    defaultParallelism slicing and the Python pass its executors run
+    to re-pickle the rows (+0.15–0.2 s on a 4-task scan, 4-core box):
+    the rows convert on the driver and unpickle in the JVM."""
+    sc = spark.sparkContext
+    rows = sc.parallelize(
+        [_SPLIT_SCHEMA.toInternal(s) for s in specs],
+        min(len(specs), sc.defaultParallelism),
+    )
+    serde = sc._jvm.SerDeUtil
+    jrdd = serde.toJavaArray(serde.pythonToJava(rows._jrdd, True))
+    return DataFrame(
+        spark._jsparkSession.applySchemaToPythonRDD(
+            jrdd.rdd(), _SPLIT_SCHEMA.json()
+        ),
+        spark,
+    )
 
 
 def mysql_binlog_read_parallel(
@@ -4351,19 +4484,31 @@ def mysql_binlog_read_parallel(
     cannot express (its unit is one file walked sequentially,
     binlog_table_reader.cc:75-96; ours usually is too, because MySQL
     rotates at max_binlog_size — but a 50 GB relay/restore file is one
-    task under both). Two stages, both distributed:
+    task under both). The scan is planned on the driver and runs as
+    ONE Spark stage:
 
-    1. header-walk each file in parallel (scan_binlog_splits — IO-bound,
-       no row decode) emitting small split specs with carried state;
-    2. re-open each file at its range offsets and decode ranges in
-       parallel (decode_binlog_bytes with init_state/seq_base).
+    1. plan_binlog_scan lists the series, prunes files off their
+       PREVIOUS_GTIDS heads and header-walks each kept file into small
+       split specs with carried state (cached, so warm scans walk
+       nothing);
+    2. the specs become an RDD relation over min(#specs,
+       defaultParallelism) tasks (_spec_relation: no shuffle moves
+       them, and the decoded output keeps an unknown size, so it is
+       never a broadcast candidate) that a single ``mapInArrow``
+       range-decodes (_decode_split).
+
+    Planning runs when the DataFrame is BUILT, so the result is a
+    snapshot of the listed files as they were then: an action run
+    again decodes the same byte ranges, even if the active file has
+    grown since. Re-reading a growing series needs a new call (or the
+    tail stream), and listing or walk errors (a vanished file, bad
+    magic) raise here, not at the action.
 
     Equality with mysql_binlog_read is structural: ranges cut only at
     transaction starts, carried TABLE_MAP/GTID/checksum state replays
     first, and __event_seq stays the ABSOLUTE file offset — byte-
-    identical rows, any split size. Stage 2 reopens paths with plain
-    ``open`` (same executor-local contract as the packed DataSource);
-    on object stores mount or use the packed source.
+    identical rows, any split size. ``path`` is a directory, a file or
+    a list of files (list_binlog_files).
 
     ``capture_query=True`` surfaces ROWS_QUERY statements as __query —
     no extra carried state: ranges cut at GTID boundaries, exactly
@@ -4372,122 +4517,52 @@ def mysql_binlog_read_parallel(
     ``start_after_gno``/``stop_at_gno`` make the scan GTID-positioned
     (see scan_binlog_splits): out-of-window transactions are pruned at
     the HEADER walk — never range-decoded — and files whose
-    PREVIOUS_GTIDS head already covers the window skip after one event
-    read. A residual row filter on __gtid keeps the output exact even
-    if a malformed stream violates gno monotonicity inside a kept
-    range (single-source contract; multi-source resume needs per-uuid
-    sets).
+    PREVIOUS_GTIDS head already covers the window are never walked. A
+    residual row filter on __gtid keeps the output exact even if a
+    malformed stream violates gno monotonicity inside a kept range
+    (single-source contract; multi-source resume needs per-uuid sets).
 
-    ``start_after_sets`` is the MULTI-SOURCE start bound: the header
-    walk opens each boundary file's window at the first transaction
-    unconsumed for its OWN sid, so the consumed prefix is never
-    range-decoded (round-8, watch item 3); per-row exactness stays
-    with the caller's per-sid filter (mysql_binlog_read_gtid_sets),
-    since interleaved consumed transactions can follow the window
-    open."""
-    import os
-
-    import pandas as pd
-
-    # driver-side listing only (the reference's binlog.index contract);
-    # file CONTENT is never loaded whole anywhere — stage 1 streams the
-    # header walk, so files beyond binaryFile's 2 GB cap work. A list
-    # of explicit file paths skips the listing (the pre-pruned entry
-    # points hand one in).
-    if isinstance(path, (list, tuple)):
-        paths = [_strip_file_scheme(p) for p in path]
-    else:
-        local = _strip_file_scheme(path)
-        if os.path.isdir(local):
-            paths = sorted(
-                os.path.join(local, n)
-                for n in os.listdir(local)
-                if not n.startswith(("_", ".")) and not n.endswith(".index")
-            )
-        else:
-            paths = [local]
-    # series-level GTID pruning off the PREVIOUS_GTIDS heads: resuming
-    # near the tail of a long retained history must not even SCHEDULE
-    # header walks for the pre-window files (one tiny head read per
-    # file here, vs a full header walk per file without it)
-    paths = prune_binlog_series_by_gtid(paths, start_after_gno, stop_at_gno)
-    out_schema0 = _binlog_out_schema(target, gtid_format, capture_query)
-    if not paths:  # empty/hidden-only dir: zero rows, not repartition(0)
-        return spark.createDataFrame([], out_schema0)
-    files = spark.createDataFrame(
-        [(p, _file_seq_of(p)) for p in paths], "path string, file_seq int"
-    ).repartition(min(len(paths), spark.sparkContext.defaultParallelism))
-
-    def make_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, fseq in zip(pdf["path"], pdf["file_seq"]):
-                for s in scan_binlog_splits_cached(
-                    str(fpath),
-                    split_bytes,
-                    start_after_gno=start_after_gno,
-                    stop_at_gno=stop_at_gno,
-                    start_after_sets=start_after_sets,
-                ):
-                    yield pd.DataFrame(
-                        {
-                            "path": [str(fpath)],
-                            "file_seq": [int(fseq)],
-                            "start": [s["start"]],
-                            "end": [s["end"]],
-                            "checksum": [
-                                -1 if s["checksum"] is None
-                                else int(s["checksum"])
-                            ],
-                            "gtid": pd.Series([s["gtid"]], dtype="object"),
-                            "sid": pd.Series([s["sid"]], dtype="object"),
-                            "maps": [_pack_maps(s["table_maps"])],
-                        }
-                    )
-
-    splits = files.mapInPandas(make_splits, schema=_SPLIT_SCHEMA)
-    splits = splits.repartition(spark.sparkContext.defaultParallelism)
-
+    ``start_after_sets`` is the MULTI-SOURCE start bound (needs
+    ``gtid_format="uuid_gno"``): files prune per sid
+    (prune_binlog_series_by_gtid_sets) and the header walk opens each
+    boundary file's window at the first transaction unconsumed for its
+    OWN sid, so the consumed prefix is never range-decoded; a per-sid
+    residual row filter keeps the output exact, since interleaved
+    consumed transactions can follow the window open."""
+    if start_after_sets is not None and gtid_format != "uuid_gno":
+        raise ValueError(
+            "start_after_sets needs gtid_format=uuid_gno — the per-row "
+            "filter keys on each row's origin UUID"
+        )
+    specs = plan_binlog_scan(
+        list_binlog_files(path),
+        split_bytes,
+        start_after_gno=start_after_gno,
+        stop_at_gno=stop_at_gno,
+        start_after_sets=start_after_sets,
+    )
     out_schema = _binlog_out_schema(target, gtid_format, capture_query)
+    if not specs:
+        return spark.createDataFrame([], out_schema)
 
     def decode_range(batches):
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_record_batches,
-        )
-
         for batch in batches:
-            for row in batch.to_pylist():  # split specs are tiny
-                with open(row["path"], "rb") as fh:
-                    fh.seek(row["start"])
-                    blob = fh.read(row["end"] - row["start"])
-                state = {
-                    "checksum": (
-                        None if row["checksum"] < 0 else bool(row["checksum"])
-                    ),
-                    "gtid": row["gtid"],
-                    "sid": None if row["sid"] is None else bytes(row["sid"]),
-                    "table_maps": _unpack_maps(bytes(row["maps"])),
-                }
-                yield from decode_binlog_record_batches(
-                    blob,
+            for spec in batch.to_pylist():  # split specs are tiny
+                yield from _decode_split(
+                    spec,
                     target,
                     database,
                     table,
-                    file_seq=int(row["file_seq"]),
-                    gtid_format=gtid_format,
-                    init_state=state,
-                    seq_base=int(row["start"]),
-                    capture_query=capture_query,
+                    gtid_format,
+                    capture_query,
+                    start_after_gno=start_after_gno,
+                    stop_at_gno=stop_at_gno,
+                    start_after_sets=start_after_sets,
                 )
 
-    out = splits.mapInArrow(decode_range, schema=out_schema)
-    if start_after_gno is not None or stop_at_gno is not None:
-        from pyspark.sql import functions as F
-
-        if start_after_gno is not None:
-            out = out.filter(F.col("__gtid") > start_after_gno)
-        if stop_at_gno is not None:
-            out = out.filter(F.col("__gtid") <= stop_at_gno)
-    return out
+    return _spec_relation(spark, specs).mapInArrow(
+        decode_range, schema=out_schema
+    )
 
 
 def mysql_binlog_read_gtid_range(
@@ -4554,50 +4629,19 @@ def mysql_binlog_read_gtid_sets(
     files decode fully — at scale that is 1-2 files per source against
     a pruned history. Closes the single-source-only caveat of
     mysql_binlog_read_gtid_range."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    local = _strip_file_scheme(path)
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
-    keep = prune_binlog_series_by_gtid_sets(paths, start_after)
-    out_schema = _binlog_out_schema(target, "uuid_gno", capture_query)
-    if not keep:
-        return spark.createDataFrame([], out_schema)
-    out = mysql_binlog_read_parallel(
+    return mysql_binlog_read_parallel(
         spark,
-        keep,
+        path,
         target,
         database,
         table,
         split_bytes=split_bytes,
         gtid_format="uuid_gno",
         capture_query=capture_query,
-        # boundary-file trim (round-8): the header walk skips each
-        # kept file's consumed prefix (every txn before the first one
-        # unconsumed for its own sid) instead of range-decoding it;
-        # the per-sid residual filter below still guarantees exactness
+        # file pruning per sid, the boundary-file trim (round-8: the
+        # header walk skips each kept file's consumed prefix) and the
+        # per-sid residual row filter that keeps the output exact
         start_after_sets=start_after or None,
-    )
-    if not start_after:
-        return out  # no bounds: a plain uuid_gno read
-    bound_map = F.create_map(
-        *[
-            lit
-            for sid, gno in start_after.items()
-            for lit in (F.lit(_sid_to_uuid(sid)), F.lit(int(gno)))
-        ]
-    )
-    return out.filter(
-        F.col("__gtid")
-        > F.coalesce(bound_map[F.col("__gtid_src")], F.lit(0))
     )
 
 
@@ -8189,25 +8233,23 @@ from pyspark.sql.datasource import (  # noqa: E402  (public DataSource API)
 
 
 class _BinlogSplit(_InputPartition):
-    __slots__ = ("path", "file_seq", "spec")
+    __slots__ = ("spec",)
 
-    def __init__(self, path: str, file_seq: int, spec: dict):
-        self.path, self.file_seq, self.spec = path, file_seq, spec
+    def __init__(self, spec: dict):
+        self.spec = spec
 
 
 class MysqlBinlogReader(_DataSourceReader):
     """``spark.read.format("mysql_binlog")`` — the idiomatic scan
-    surface over real binlog v4 files, same machinery as
-    ``mysql_binlog_read_parallel``: planning header-walks each file
-    into transaction-aligned byte ranges with carried
-    TABLE_MAP/GTID/checksum state (cached via
+    surface over real binlog v4 files, with the same driver-side
+    planner as ``mysql_binlog_read_parallel`` (plan_binlog_scan):
+    each file is header-walked into transaction-aligned byte ranges
+    with carried TABLE_MAP/GTID/checksum state (cached via
     ``scan_binlog_splits_cached``; GTID bounds prune whole files off
     their PREVIOUS_GTIDS heads and skip out-of-window prefixes), and
-    each task range-decodes through the columnar kernel, yielding
-    Arrow RecordBatches — no Python row objects on the scan path.
-    Planning runs on the driver (the reference's binlog.index listing
-    contract); histories with very many files can prefer the
-    function API, whose stage-1 header walk is itself distributed."""
+    each task range-decodes one range through the columnar kernel,
+    yielding Arrow RecordBatches — no Python row objects on the scan
+    path."""
 
     def __init__(self, options: dict):
         self.options_index_file = options.get("index_file")
@@ -8232,7 +8274,7 @@ class MysqlBinlogReader(_DataSourceReader):
         # consumed-prefix skip at the header walk, per-sid residual
         # row filter
         raw_sets = options.get("start_after_sets")
-        self.start_after_sets: dict[str, int] | None = None
+        self.start_after_sets: dict[bytes, int] | None = None
         if raw_sets not in (None, ""):
             if self.start_after_gno is not None:
                 raise ValueError(
@@ -8251,7 +8293,8 @@ class MysqlBinlogReader(_DataSourceReader):
                     raise ValueError(
                         f"start_after_sets entry {part!r} is not uuid:gno"
                     )
-                self.start_after_sets[u.lower()] = int(g)
+                sid = bytes.fromhex(u.replace("-", ""))
+                self.start_after_sets[sid] = int(g)
 
     def partitions(self):
         import os
@@ -8273,92 +8316,27 @@ class MysqlBinlogReader(_DataSourceReader):
                     f"binlog index {index_file} lists no files"
                 )
         else:
-            local = _strip_file_scheme(self.path)
-            if os.path.isdir(local):
-                paths = sorted(
-                    os.path.join(local, n)
-                    for n in os.listdir(local)
-                    if not n.startswith(("_", ".")) and not n.endswith(".index")
-                )
-            else:
-                paths = [local]
-        sets_bytes = None
-        if self.start_after_sets is not None:
-            sets_bytes = {
-                bytes.fromhex(u.replace("-", "")): g
-                for u, g in self.start_after_sets.items()
-            }
-            paths = prune_binlog_series_by_gtid_sets(paths, sets_bytes)
-        else:
-            paths = prune_binlog_series_by_gtid(
-                paths, self.start_after_gno, self.stop_at_gno
-            )
-        parts = []
-        for p in paths:
-            for spec in scan_binlog_splits_cached(
-                p,
+            paths = list_binlog_files(self.path)
+        return [
+            _BinlogSplit(spec)
+            for spec in plan_binlog_scan(
+                paths,
                 self.split_bytes,
                 start_after_gno=self.start_after_gno,
                 stop_at_gno=self.stop_at_gno,
-                start_after_sets=sets_bytes,
-            ):
-                parts.append(_BinlogSplit(p, _file_seq_of(p), spec))
-        return parts
+                start_after_sets=self.start_after_sets,
+            )
+        ]
 
     def read(self, partition: "_BinlogSplit"):
-        import pyarrow.compute as pc
-
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_record_batches,
-        )
-
-        s = partition.spec
-        with open(partition.path, "rb") as fh:
-            fh.seek(s["start"])
-            blob = fh.read(s["end"] - s["start"])
-        for batch in decode_binlog_record_batches(
-            blob,
+        return _decode_split(
+            partition.spec,
             self.target,
             self.database,
             self.table,
-            file_seq=partition.file_seq,
-            gtid_format=self.gtid_format,
-            capture_query=self.capture_query,
-            init_state={
-                "checksum": s["checksum"],
-                "gtid": s["gtid"],
-                "sid": s["sid"],
-                "table_maps": list(s["table_maps"]),
-            },
-            seq_base=s["start"],
-        ):
-            # residual GTID filters (same exactness contract as the
-            # function API: header pruning is a superset cut)
-            if self.start_after_gno is not None:
-                batch = batch.filter(
-                    pc.greater(batch["__gtid"], self.start_after_gno)
-                )
-            if self.stop_at_gno is not None:
-                batch = batch.filter(
-                    pc.less_equal(batch["__gtid"], self.stop_at_gno)
-                )
-            if self.start_after_sets is not None and batch.num_rows:
-                import numpy as np
-                import pyarrow as pa
-
-                srcs = batch["__gtid_src"].to_pylist()
-                bounds = np.fromiter(
-                    (
-                        self.start_after_sets.get((s or "").lower(), 0)
-                        for s in srcs
-                    ),
-                    dtype=np.int64,
-                    count=len(srcs),
-                )
-                batch = batch.filter(
-                    pc.greater(batch["__gtid"], pa.array(bounds))
-                )
-            if batch.num_rows:
-                yield batch
-
-
+            self.gtid_format,
+            self.capture_query,
+            start_after_gno=self.start_after_gno,
+            stop_at_gno=self.stop_at_gno,
+            start_after_sets=self.start_after_sets,
+        )

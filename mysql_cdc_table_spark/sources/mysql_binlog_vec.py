@@ -37,8 +37,9 @@ scalar walk and merge back in as trailing record batches.
 Reference: binlog_table_reader.cc:75-96 walks one event at a time and
 unpacks values via MySQL's own Field::unpack — single-threaded, scalar.
 This kernel exists so a 1 GB binlog file decodes at numpy speed inside
-one Spark task, while ``mysql_binlog_read_parallel`` spreads
-transaction-aligned ranges of the same file across tasks.
+one Spark task, while ``mysql_binlog_read_parallel`` plans
+transaction-aligned ranges of the same file on the driver and decodes
+them across the tasks of one Spark stage.
 """
 
 from __future__ import annotations

@@ -10,6 +10,9 @@ history looks like), then times:
 
 The resume read should cost O(window): all earlier files skip off
 their PREVIOUS_GTIDS head after one event read, never range-decoding.
+Each timing covers DataFrame build plus count, because the scan is
+planned on the driver when the DataFrame is built (file pruning,
+header walks) and one Spark stage then decodes the planned ranges.
 
 Usage: python scripts/gtid_resume_bench.py [n_files] [txns_per_file]
 """
@@ -71,19 +74,19 @@ def main() -> None:
     window_start = total - per_file  # resume inside the LAST file
     size_mb = sum(p.stat().st_size for p in tmp.iterdir()) / 2**20
 
-    def run(df) -> tuple[float, int]:
+    def run(build) -> tuple[float, int]:
         t0 = time.perf_counter()
-        n = df.count()
+        n = build().count()
         return time.perf_counter() - t0, n
 
     # warm the JVM/python workers once
-    run(mysql_binlog_read_parallel(spark, str(tmp), TARGET, "d", "t"))
+    run(lambda: mysql_binlog_read_parallel(spark, str(tmp), TARGET, "d", "t"))
 
     t_full, n_full = run(
-        mysql_binlog_read_parallel(spark, str(tmp), TARGET, "d", "t")
+        lambda: mysql_binlog_read_parallel(spark, str(tmp), TARGET, "d", "t")
     )
     t_res, n_res = run(
-        mysql_binlog_read_gtid_range(
+        lambda: mysql_binlog_read_gtid_range(
             spark, str(tmp), TARGET, "d", "t",
             start_after_gno=window_start,
         )
@@ -164,10 +167,10 @@ def main() -> None:
             F.col("__gtid") > F.coalesce(bm[F.col("__gtid_src")], F.lit(0))
         )
 
-    run(per_sid_filtered_full(True))  # warm
-    t_old, n_old = run(per_sid_filtered_full(False))
+    run(lambda: per_sid_filtered_full(True))  # warm
+    t_old, n_old = run(lambda: per_sid_filtered_full(False))
     t_new, n_new = run(
-        mysql_binlog_read_gtid_sets(
+        lambda: mysql_binlog_read_gtid_sets(
             spark, str(tmp2), TARGET, "d", "t", start_after=bounds
         )
     )

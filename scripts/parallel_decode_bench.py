@@ -4,9 +4,12 @@ sequential per-file walk — both on the round-6 columnar kernel.
 Builds one large binlog file (default ~100 MiB of checksummed
 10-row-per-event transactions), then times:
   1. mysql_binlog_read        — one file = one decode task
-  2. mysql_binlog_read_parallel — transaction-aligned ranges fan out
-     across local[32] tasks (the scan the single-threaded reference
-     cannot express, binlog_table_reader.cc:75-96)
+  2. mysql_binlog_read_parallel — the driver header-walks the file into
+     transaction-aligned ranges (plan_binlog_scan), then one Spark
+     stage decodes them across the session's tasks (the scan the
+     single-threaded reference cannot express,
+     binlog_table_reader.cc:75-96); timed cold (the driver walks) and
+     warm (split specs from the cache)
 
 Usage: python scripts/parallel_decode_bench.py [n_txns] [split_mib]
 """
@@ -107,8 +110,8 @@ def main() -> None:
             "t",
             split_bytes=split_mib << 20,
         )
-        # cold first: header walk runs for real and populates the
-        # split-spec cache (scan_binlog_splits_cached, round 7)
+        # cold first: the driver's header walk runs for real and
+        # populates the split-spec cache (scan_binlog_splits_cached)
         par_cold = timed(
             f"parallel ({split_mib} MiB splits, cold walk)", par_fn, runs=1
         )

@@ -1255,6 +1255,21 @@ def test_parallel_split_read_equals_whole_file(spark, tmp_path):
     for a, b in zip(seq, par):
         assert a == b, (a, b)
 
+    # more specs than tasks: the local scan slices several split specs
+    # into each decode task
+    fine = 256
+    assert (
+        len(scan_binlog_splits(blob1, target_split_bytes=fine))
+        > spark.sparkContext.defaultParallelism
+    )
+    par_fine = sorted(
+        (row.asDict() for row in mysql_binlog_read_parallel(
+            spark, str(tmp_path), new_target, "d", "t",
+            split_bytes=fine).collect()),
+        key=key,
+    )
+    assert par_fine == par
+
 
 @settings(max_examples=25, deadline=None)
 @given(
@@ -1962,6 +1977,112 @@ def test_read_gtid_range_equals_filtered_full_read(spark, tmp_path):
         str(tmp_path / "binlog.000003"), 512,
         start_after_gno=25, stop_at_gno=60,
     ) == []
+
+
+def _gno_series(d, sid=b"\x11" * 16):
+    """Three rotated files, gnos 1..119 in contiguous ranges, each head
+    carrying its PREVIOUS_GTIDS summary (empty on the first file)."""
+    for i, (lo, hi) in enumerate([(1, 40), (40, 80), (80, 120)], start=1):
+        (d / f"binlog.{i:06d}").write_bytes(
+            _gno_blob(
+                range(lo, hi),
+                previous_gtids={sid: [(1, lo)] if lo > 1 else []},
+            )
+        )
+
+
+def test_binlog_scans_plan_on_driver_one_decode_stage(spark, tmp_path):
+    """Split specs are planned on the driver: the executed plans of the
+    parallel read and of a GTID resume hold the one decode
+    (MapInArrow over the planned specs) — no Exchange, no MapInPandas
+    header-walk stage."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        mysql_binlog_read_gtid_range,
+        mysql_binlog_read_parallel,
+    )
+
+    _gno_series(tmp_path)
+    for df in (
+        mysql_binlog_read_parallel(
+            spark, str(tmp_path), TARGET, "d", "t", split_bytes=512
+        ),
+        mysql_binlog_read_gtid_range(
+            spark, str(tmp_path), TARGET, "d", "t",
+            start_after_gno=25, split_bytes=512,
+        ),
+    ):
+        assert df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, plan
+        assert "Exchange" not in plan, plan
+        assert "MapInPandas" not in plan, plan
+
+
+def test_binlog_scan_output_is_never_a_broadcast_candidate(spark, tmp_path):
+    """The decoded changelog must not inherit the split specs' size: a
+    few-KB estimate would plan update_pairs' self-join (or any join on
+    a scan) as a broadcast of the whole decoded history. The scan's
+    size stays unknown, so the join plans as a sort-merge join under
+    the session's autoBroadcastJoinThreshold."""
+    from mysql_cdc_table_spark.cdc.ops import update_pairs
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        mysql_binlog_read_gtid_range,
+        mysql_binlog_read_parallel,
+    )
+
+    _gno_series(tmp_path)
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    assert threshold > 0
+    for scan in (
+        mysql_binlog_read_parallel(spark, str(tmp_path), TARGET, "d", "t"),
+        mysql_binlog_read_gtid_range(
+            spark, str(tmp_path), TARGET, "d", "t", start_after_gno=25
+        ),
+    ):
+        size = scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert size > threshold, size
+        qe = update_pairs(scan, ["id"])._jdf.queryExecution()
+        plan = qe.sparkPlan().toString()  # as planned, before AQE
+        assert "SortMergeJoin" in plan, plan
+        assert "Broadcast" not in plan, plan
+
+
+def test_binlog_scan_plan_logs_counters(spark, tmp_path, caplog):
+    """One DEBUG record per planned scan carries the planner counters:
+    files listed/pruned, splits, split-cache tier hits and walks."""
+    import logging
+
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        mysql_binlog_read_gtid_range,
+        scan_binlog_splits_file,
+    )
+
+    _gno_series(tmp_path)
+    want_splits = len(scan_binlog_splits_file(
+        str(tmp_path / "binlog.000003"), 512, start_after_gno=85
+    ))
+    plans = []
+    with caplog.at_level(logging.DEBUG, logger="mysql_cdc_table_spark.binlog"):
+        for _ in range(2):
+            caplog.clear()
+            mysql_binlog_read_gtid_range(
+                spark, str(tmp_path), TARGET, "d", "t",
+                start_after_gno=85, split_bytes=512,
+            )
+            [rec] = [
+                r for r in caplog.records
+                if r.name == "mysql_cdc_table_spark.binlog"
+            ]
+            assert rec.levelno == logging.DEBUG
+            assert "files_pruned=2" in rec.getMessage()
+            plans.append(rec.binlog_plan)
+    common = {"files_listed": 3, "files_pruned": 2, "splits": want_splits}
+    assert plans == [
+        {**common, "cache_mem_hits": 0, "cache_disk_hits": 0, "walks": 1},
+        {**common, "cache_mem_hits": 1, "cache_disk_hits": 0, "walks": 0},
+    ]
 
 
 def test_prune_binlog_series_by_gtid(tmp_path):
@@ -3282,6 +3403,56 @@ def test_writer_txn_rebuild_roundtrip_property(checksum, txspec):
     tms = {r["__gtid"]: r["__tm"] for r in got}
     for g, tm in tms.items():
         assert tm == dtm.datetime(2024, 1, 1) + dtm.timedelta(seconds=g)
+
+
+def test_split_cache_concurrent_driver_threads(tmp_path, monkeypatch):
+    """Scans are planned on the driver, from any thread: many threads
+    over a two-entry LRU (an eviction on nearly every call) and a
+    shared disk tier all get exact specs, and none raises."""
+    import sys
+    import threading
+
+    import mysql_cdc_table_spark.sources.mysql_binlog as mbm
+
+    paths = []
+    for i in range(6):
+        p = tmp_path / f"binlog.{i + 1:06d}"
+        p.write_bytes(_gno_blob(range(1 + 40 * i, 41 + 40 * i)))
+        paths.append(str(p))
+    want = {
+        (p, sb): mbm.scan_binlog_splits_file(p, sb)
+        for p in paths
+        for sb in (256, 512)
+    }
+    keys = list(want)
+    monkeypatch.setattr(mbm, "_SPLIT_MEM_CACHE_MAX", 2)
+    cdir = str(tmp_path / "cache")
+    errors = []
+
+    def worker(k):
+        try:
+            for j in range(150):
+                key = keys[(k + j) % len(keys)]
+                got = mbm.scan_binlog_splits_cached(*key, cache_dir=cdir)
+                assert got == want[key], key
+        except Exception as e:  # collected, asserted below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=worker, args=(k,)) for k in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+        mbm._SPLIT_MEM_CACHE.clear()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
 
 
 def test_split_cache_keys_on_per_sid_bounds(tmp_path):

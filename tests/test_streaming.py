@@ -853,3 +853,36 @@ def test_stream_stream_join_state_survives_restart(spark, tmp_path):
     )
     assert len(want) > 0
     assert got == want  # exactly once per pair, all recovered-state
+
+
+def test_run_to_completion_stops_and_raises_on_timeout(spark, tmp_path):
+    """A query that cannot drain within the timeout is stopped and
+    raises TimeoutError instead of coming back still running."""
+    import time
+
+    src = tmp_path / "src"
+    spark.range(4).write.json(str(src))
+
+    def never_drains(batches):
+        time.sleep(600)
+        yield from batches
+
+    stream = (
+        spark.readStream.schema("id long").json(str(src))
+        .mapInPandas(never_drains, "id long")
+    )
+    writer = (
+        stream.writeStream.queryName("never_drains")
+        .format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(TimeoutError):
+            run_to_completion(writer, timeout_s=3)
+        assert all(q.name != "never_drains" for q in spark.streams.active)
+    finally:
+        for q in spark.streams.active:
+            if q.name == "never_drains":
+                q.stop()
+    assert time.monotonic() - t0 < 120
